@@ -39,7 +39,10 @@ INT8 a sign byte of 2, floats a fixed quiet-NaN bit pattern, CHAR a
 leading NUL byte, var-length columns 0xFFFFFFFF in the length array,
 BOOL/DECIMAL/DATETIME a flag byte of 1.
 
-The decoder runs as ``mapInPandas`` (Arrow-batched; binary frame walks
+There is one decoder: one envelope parser (:func:`parse_envelope`, fed
+by :func:`split_stream` in the ``cdc-binlog`` source) and one typed-row
+builder (:func:`_changelog_rows`), which every decode entry point goes
+through. It runs as ``mapInPandas`` (Arrow-batched; binary frame walks
 are genuinely inexpressible as column expressions — SURVEY §4.1's one
 custom physical piece). The encoder is plain Python, used to build test
 fixtures and golden streams (the analog of the reference's OWRITESBLOB
@@ -48,21 +51,22 @@ recorder, ``ext/_informixcdcmodule.ec:201-217``).
 
 from __future__ import annotations
 
+import bisect
 import datetime as dt
 import struct
 from collections.abc import Iterable, Iterator
 from decimal import Decimal, localcontext
 
+import numpy as np
 import pandas as pd
 
 from informixcdc_spark.cdc.model import (
-    CHANGE_HEADER_SZ,
     ENVELOPE_SZ,
     PACKET_SCHEME,
-    RECORD_NAMES,
     RecordType,
+    changelog_schema,
 )
-from informixcdc_spark.cdc.typemap import WireColumn
+from informixcdc_spark.cdc.typemap import WireColumn, to_struct
 
 _EPOCH_DATE = dt.date(1899, 12, 31)  # Informix julian day 0
 _NULL_F64 = b"\x7f\xf8\x00\x00\xde\xad\xbe\xef"
@@ -241,8 +245,47 @@ def decode_row_image(cols: list[WireColumn], buf: bytes, off: int) -> dict:
 # ---------------------------------------------------------------------------
 # records
 # ---------------------------------------------------------------------------
+_ENVELOPE = struct.Struct(">iiii")
+
+#: the envelope parser's output, one row per framed record and the
+#: ``cdc-binlog`` source's schema: every variant's fields nullable
+#: (§1.2), plus the raw row image for the per-table row codec and the
+#: record's position in its capture
+BINLOG_DDL = (
+    "seq_number BIGINT, record_type STRING, transaction_id BIGINT, "
+    "tabid INT, flags INT, start_time BIGINT, commit_time BIGINT, "
+    "user_id INT, cols_desc STRING, row_image BINARY, stream_pos BIGINT"
+)
+_ENVELOPE_COLS = [c.split()[0] for c in BINLOG_DDL.split(",")]
+# positions in BINLOG_DDL
+_SEQ, _TXID, _TABID, _FLAGS, _START, _COMMIT, _USER, _DESC, _IMAGE = (
+    0, 2, 3, 4, 5, 6, 7, 8, 9
+)
+
+#: tag → (name, fixed payload header, the BINLOG_DDL position each header
+#: field fills (None: not carried), the position the payload's tail
+#: fills) — the layouts in the module docstring
+_LAYOUTS = {
+    t.value: (t.name, struct.Struct(fmt), slots, tail)
+    for t, fmt, slots, tail in [
+        (RecordType.BEGINTX, ">qiqi", (_SEQ, _TXID, _START, _USER), None),
+        (RecordType.COMMTX, ">qiq", (_SEQ, _TXID, _COMMIT), None),
+        (RecordType.RBTX, ">qi", (_SEQ, _TXID), None),
+        (RecordType.INSERT, ">qiii", (_SEQ, _TXID, _TABID, _FLAGS), _IMAGE),
+        (RecordType.DELETE, ">qiii", (_SEQ, _TXID, _TABID, _FLAGS), _IMAGE),
+        (RecordType.UPDBEF, ">qiii", (_SEQ, _TXID, _TABID, _FLAGS), _IMAGE),
+        (RecordType.UPDAFT, ">qiii", (_SEQ, _TXID, _TABID, _FLAGS), _IMAGE),
+        (RecordType.DISCARD, ">qi", (_SEQ, _TXID), None),
+        (RecordType.TRUNCATE, ">qii", (_SEQ, _TXID, _TABID), None),
+        (RecordType.TABSCHEM, ">iiiii", (_TABID, _FLAGS, None, None, None), _DESC),
+        (RecordType.TIMEOUT, ">q", (_SEQ,), None),
+        (RecordType.ERROR, "", (), None),
+    ]
+}
+
+
 def _frame(tag: int, payload: bytes) -> bytes:
-    return struct.pack(">iiii", ENVELOPE_SZ, len(payload), PACKET_SCHEME, tag) + payload
+    return _ENVELOPE.pack(ENVELOPE_SZ, len(payload), PACKET_SCHEME, tag) + payload
 
 
 def encode_record(
@@ -257,28 +300,22 @@ def encode_record(
     cols_desc: str = "",
     row_image: bytes = b"",
 ) -> bytes:
-    t = rtype
-    if t in (RecordType.INSERT, RecordType.DELETE, RecordType.UPDBEF, RecordType.UPDAFT):
-        payload = struct.pack(">qiii", seq, txid, tabid, flags) + row_image
-        assert len(payload) - len(row_image) == CHANGE_HEADER_SZ
-    elif t == RecordType.BEGINTX:
-        payload = struct.pack(">qiqi", seq, txid, start_time, user_id)
-    elif t == RecordType.COMMTX:
-        payload = struct.pack(">qiq", seq, txid, commit_time)
-    elif t in (RecordType.RBTX, RecordType.DISCARD):
-        payload = struct.pack(">qi", seq, txid)
-    elif t == RecordType.TRUNCATE:
-        payload = struct.pack(">qii", seq, txid, tabid)
-    elif t == RecordType.TABSCHEM:
-        raw = cols_desc.encode("utf-8")
-        payload = struct.pack(">iiiii", tabid, flags, 0, 0, 0) + raw
-    elif t == RecordType.TIMEOUT:
-        payload = struct.pack(">q", seq)
-    elif t == RecordType.ERROR:
-        payload = b""
-    else:
-        raise ValueError(f"unknown record type {t}")
-    return _frame(t.value, payload)
+    _name, head, slots, tail = _LAYOUTS[rtype.value]
+    fields = {
+        _SEQ: seq,
+        _TXID: txid,
+        _TABID: tabid,
+        _FLAGS: flags,
+        _START: start_time,
+        _COMMIT: commit_time,
+        _USER: user_id,
+    }
+    payload = head.pack(*(fields.get(slot, 0) for slot in slots))
+    if tail == _IMAGE:
+        payload += row_image
+    elif tail == _DESC:
+        payload += cols_desc.encode("utf-8")
+    return _frame(rtype.value, payload)
 
 
 def split_stream(buf: bytes, strict: bool = False) -> Iterator[bytes]:
@@ -291,12 +328,22 @@ def split_stream(buf: bytes, strict: bool = False) -> Iterator[bytes]:
     garbage downstream. Callers that stitch chunks retry the remainder
     with the next chunk appended; callers framing a COMPLETE unit (a
     whole capture file) pass ``strict=True`` so a torn tail fails
-    loudly instead of silently losing the final record."""
+    loudly instead of silently losing the final record.
+
+    A frame whose envelope cannot be right — a bad packet scheme, a
+    header shorter than the envelope, a negative payload size — raises
+    ``ValueError`` naming its offset, so every yielded frame is at least
+    16 bytes and the walk always advances."""
     pos = 0
     while pos + ENVELOPE_SZ <= len(buf):
-        header_sz, payload_sz, scheme, _tag = struct.unpack_from(">iiii", buf, pos)
+        header_sz, payload_sz, scheme, _tag = _ENVELOPE.unpack_from(buf, pos)
         if scheme != PACKET_SCHEME:
             raise ValueError(f"bad packet scheme {scheme} at offset {pos}")
+        if header_sz < ENVELOPE_SZ or payload_sz < 0:
+            raise ValueError(
+                f"bad frame size (header {header_sz}, payload {payload_sz}) "
+                f"at offset {pos}"
+            )
         sz = header_sz + payload_sz
         if pos + sz > len(buf):
             break  # incomplete trailing frame
@@ -309,12 +356,63 @@ def split_stream(buf: bytes, strict: bool = False) -> Iterator[bytes]:
         )
 
 
+def parse_envelope(rec: bytes, stream_pos: int = 0) -> tuple:
+    """One framed record → its envelope row, a tuple in ``BINLOG_DDL``
+    column order (the per-tag extractors P3–P13, row codec aside). The
+    engine's one envelope parser: the ``cdc-binlog`` source,
+    :func:`decode_stream_df` and :func:`decode_record` all go through it.
+
+    ``stream_pos`` is the record's position in its capture — the source
+    passes its LSN analog; a one-schema decode can leave it at 0. A bad
+    packet scheme, an unknown tag, or a frame shorter than its record
+    type's fixed header raises ``ValueError``."""
+    if len(rec) < ENVELOPE_SZ:
+        raise ValueError(f"record of {len(rec)} bytes has no envelope")
+    _header_sz, _payload_sz, scheme, tag = _ENVELOPE.unpack_from(rec, 0)
+    if scheme != PACKET_SCHEME:
+        raise ValueError(f"bad packet scheme {scheme}")
+    layout = _LAYOUTS.get(tag)
+    if layout is None:
+        raise ValueError(f"unknown record tag {tag}")
+    name, head, slots, tail = layout
+    body = ENVELOPE_SZ + head.size
+    if len(rec) < body:
+        raise ValueError(
+            f"{name} record of {len(rec)} bytes is shorter than its "
+            f"{body}-byte header"
+        )
+    env = [None, name, None, None, None, None, None, None, None, None, stream_pos]
+    for slot, v in zip(slots, head.unpack_from(rec, ENVELOPE_SZ)):
+        if slot is not None:
+            env[slot] = v
+    if tail == _IMAGE:
+        env[_IMAGE] = rec[body:]
+    elif tail == _DESC:
+        env[_DESC] = rec[body:].decode("utf-8")
+    return tuple(env)
+
+
+def _replay_flags(record_type: str, seq: int, last_seq_number: int):
+    """(discard_candidate, discard_transaction) for one record — the
+    reference's per-record replay markers (strict ``seq <`` comparison,
+    ext/_informixcdcmodule.ec:1459-1461,1527-1529,1585-1587); None on
+    the records that carry no marker."""
+    if record_type == "BEGINTX":
+        return seq < last_seq_number, None
+    if record_type in ("COMMTX", "RBTX"):
+        return None, seq < last_seq_number
+    return None, None
+
+
 def decode_record(
     rec: bytes,
     registry: dict[int, list[WireColumn]] | None = None,
     last_seq_number: int = 0,
 ) -> dict:
-    """One framed record → generic dict (the per-tag extractors P3–P13).
+    """One framed record → generic dict: the :func:`parse_envelope`
+    fields its record type carries, plus the decoded ``row`` of an IUD
+    record whose table ``registry`` holds. The scalar, Spark-free view
+    of a record.
 
     ``last_seq_number`` is the session's last-committed LSN resolved at
     activate time (0 before any commit, matching the reference's init —
@@ -323,62 +421,120 @@ def decode_record(
     flag, both ``seq_number < last_seq_number`` — the per-record replay
     markers the reference computes in its extractors
     (``ext/_informixcdcmodule.ec:1459-1461,1527-1529,1585-1587``)."""
-    header_sz, _payload_sz, scheme, tag = struct.unpack_from(">iiii", rec, 0)
-    if scheme != PACKET_SCHEME:
-        raise ValueError(f"bad packet scheme {scheme}")
-    p = ENVELOPE_SZ
-    out: dict = {"record_type": RECORD_NAMES.get(tag, "ERROR")}
-    t = RecordType(tag)
-    if t in (RecordType.INSERT, RecordType.DELETE, RecordType.UPDBEF, RecordType.UPDAFT):
-        seq, txid, tabid, flags = struct.unpack_from(">qiii", rec, p)
-        out.update(seq_number=seq, transaction_id=txid, tabid=tabid, flags=flags)
-        if registry and tabid in registry:
-            out["row"] = decode_row_image(registry[tabid], rec, p + CHANGE_HEADER_SZ)
-    elif t == RecordType.BEGINTX:
-        seq, txid, st, uid = struct.unpack_from(">qiqi", rec, p)
-        out.update(
-            seq_number=seq,
-            transaction_id=txid,
-            start_time=st,
-            user_id=uid,
-            discard_candidate=seq < last_seq_number,
-        )
-    elif t == RecordType.COMMTX:
-        seq, txid, ct = struct.unpack_from(">qiq", rec, p)
-        out.update(
-            seq_number=seq,
-            transaction_id=txid,
-            commit_time=ct,
-            discard_transaction=seq < last_seq_number,
-        )
-    elif t == RecordType.RBTX:
-        seq, txid = struct.unpack_from(">qi", rec, p)
-        out.update(
-            seq_number=seq,
-            transaction_id=txid,
-            discard_transaction=seq < last_seq_number,
-        )
-    elif t == RecordType.DISCARD:
-        seq, txid = struct.unpack_from(">qi", rec, p)
-        out.update(seq_number=seq, transaction_id=txid)
-    elif t == RecordType.TRUNCATE:
-        seq, txid, tabid = struct.unpack_from(">qii", rec, p)
-        out.update(seq_number=seq, transaction_id=txid, tabid=tabid)
-    elif t == RecordType.TABSCHEM:
-        tabid, flags, fls, flc, vlc = struct.unpack_from(">iiiii", rec, p)
-        out.update(
-            tabid=tabid,
-            flags=flags,
-            cols_desc=rec[p + 20 :].decode("utf-8"),
-        )
-    elif t == RecordType.TIMEOUT:
-        out["seq_number"] = struct.unpack_from(">q", rec, p)[0]
+    env = parse_envelope(rec)
+    out = {k: v for k, v in zip(_ENVELOPE_COLS[:_DESC + 1], env) if v is not None}
+    if env[_IMAGE] is not None and registry and out["tabid"] in registry:
+        out["row"] = decode_row_image(registry[out["tabid"]], env[_IMAGE], 0)
+    cand, txn = _replay_flags(out["record_type"], env[_SEQ], last_seq_number)
+    if cand is not None:
+        out["discard_candidate"] = cand
+    if txn is not None:
+        out["discard_transaction"] = txn
     return out
 
 
 # ---------------------------------------------------------------------------
-# vectorized Spark decode
+# typed changelog rows
 # ---------------------------------------------------------------------------
+#: epoch-0 sentinel: a stream position before every real one, for the
+#: schema a caller knows before any in-stream announcement
+_EPOCH0_POS = -(1 << 62)
+
+
+def _changelog_rows(
+    envelopes: Iterable[tuple],
+    epochs: list[tuple[int, list[WireColumn]]],
+    table_tabid: int,
+    tabname: str,
+    last_seq_number: int,
+) -> Iterator[tuple]:
+    """The engine's one typed-row builder: envelope rows (``BINLOG_DDL``
+    order) → changelog rows (``changelog_schema`` order) for one table.
+
+    Schema announcements and other tables' events are dropped; this
+    table's IUD and TRUNCATE records carry ``tabid``/``tabname``, and
+    table-less lifecycle records pass with a NULL row. A row image
+    decodes with the epoch in force at its ``stream_pos`` (the greatest
+    announcement position ≤ it; ``epochs`` ascending) and projects onto
+    the latest epoch's columns."""
+    positions = [pos for pos, _ in epochs]
+    latest = epochs[-1][1]
+    names = [c.name for c in latest]
+    for env in envelopes:
+        seq, rtype, txid, tabid, flags, start, commit, user, _, image, pos = env
+        if rtype == "TABSCHEM" or (tabid is not None and tabid != table_tabid):
+            continue
+        row = None
+        if image is not None:
+            i = bisect.bisect_right(positions, pos) - 1
+            if i < 0:
+                raise ValueError(f"record at stream_pos={pos} precedes first TABSCHEM")
+            cols = epochs[i][1]
+            row = decode_row_image(cols, image, 0)
+            if cols is not latest:
+                row = {n: row.get(n) for n in names}
+        cand, txn = _replay_flags(rtype, seq, last_seq_number)
+        yield (
+            seq or 0,
+            rtype,
+            txid,
+            tabid,
+            None if tabid is None else tabname,
+            flags,
+            start,
+            commit,
+            user,
+            cand,
+            txn,
+            row,
+        )
+
+
+def _envelope_rows(pdf: pd.DataFrame) -> Iterator[tuple]:
+    """One Arrow batch of envelope rows → tuples of plain Python values in
+    ``BINLOG_DDL`` order. pandas widens an int column holding NULLs to
+    float64 with NaN; such a column turns back into ints and None."""
+    cols = []
+    for name in _ENVELOPE_COLS:
+        s = pdf[name]
+        if s.dtype.kind == "f":
+            vals = s.fillna(0).astype("int64").tolist()
+            for i in np.flatnonzero(s.isna().to_numpy()).tolist():
+                vals[i] = None
+        else:
+            vals = s.tolist()
+        cols.append(vals)
+    return zip(*cols)
+
+
+def _decode_df(
+    df,
+    envelopes,
+    schema_log: list[tuple[int, list[WireColumn]]],
+    table_tabid: int,
+    tabname: str,
+    last_seq_number: int,
+):
+    """The one decode: an Arrow-batched ``mapInPandas`` in which
+    ``envelopes`` turns each batch of ``df`` into envelope rows and
+    :func:`_changelog_rows` builds the typed rows. Output ``row`` struct
+    = the latest epoch's schema."""
+    epochs = sorted(schema_log, key=lambda e: e[0])
+    if not epochs:
+        raise ValueError("schema_log is empty — no TABSCHEM for table")
+    out_schema = changelog_schema(to_struct(epochs[-1][1]))
+    names = out_schema.fieldNames()
+
+    def _decode(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = _changelog_rows(
+                envelopes(pdf), epochs, table_tabid, tabname, last_seq_number
+            )
+            yield pd.DataFrame(list(rows), columns=names)
+
+    return df.mapInPandas(_decode, schema=out_schema)
+
+
 def decode_stream_df(
     records_df,
     registry: dict[int, list[WireColumn]],
@@ -387,66 +543,29 @@ def decode_stream_df(
     last_seq_number: int = 0,
 ):
     """Binary records DataFrame (column ``record: binary``) → typed
-    changelog DataFrame for one captured table.
-
-    Arrow-batched ``mapInPandas``: each executor partition walks its
-    records with the scalar decoders — the only Python hot path in the
-    engine, and batch-vectorized at the transfer layer. Control records
-    pass through with a NULL row struct.
+    changelog DataFrame for one captured table: each record goes through
+    :func:`parse_envelope`, then the same row builder as
+    :func:`decode_envelope_df`, inside one ``mapInPandas`` — the only
+    Python hot path in the engine, batch-vectorized at the transfer
+    layer. Control records pass through with a NULL row struct.
 
     ``last_seq_number`` (the session watermark resolved at activate
-    time) flows into :func:`decode_record`, so BEGINTX/COMMTX/RBTX rows
-    carry the reference's per-record ``discard_candidate`` /
-    ``discard_transaction`` replay markers. With the default 0, the
-    flags are False on those records (nothing is a replay), matching the
-    reference's fresh-session init; consumers that resolve the watermark
-    only after decoding can instead stamp an already-decoded changelog
-    with :func:`informixcdc_spark.cdc.apply.with_discard_flags`.
+    time) stamps BEGINTX/COMMTX/RBTX rows with the reference's
+    per-record ``discard_candidate`` / ``discard_transaction`` replay
+    markers. With the default 0, the flags are False on those records
+    (nothing is a replay), matching the reference's fresh-session init;
+    consumers that resolve the watermark only after decoding can instead
+    stamp an already-decoded changelog with
+    :func:`informixcdc_spark.cdc.apply.with_discard_flags`.
     """
-    from informixcdc_spark.cdc.model import changelog_schema
-    from informixcdc_spark.cdc.typemap import to_struct
-
-    row_struct = to_struct(registry[table_tabid])
-    out_schema = changelog_schema(row_struct)
-    cols = registry[table_tabid]
-    field_names = [f.name for f in out_schema.fields]
-
-    def _decode(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf["record"]:
-                d = decode_record(bytes(rec), {table_tabid: cols}, last_seq_number)
-                if d.get("tabid") not in (None, table_tabid):
-                    continue  # another table's events
-                rows.append(
-                    {
-                        "seq_number": d.get("seq_number", 0),
-                        "record_type": d["record_type"],
-                        "transaction_id": d.get("transaction_id"),
-                        "tabid": d.get("tabid"),
-                        "tabname": tabname if d.get("tabid") == table_tabid else None,
-                        "flags": d.get("flags"),
-                        "start_time": d.get("start_time"),
-                        "commit_time": d.get("commit_time"),
-                        "user_id": d.get("user_id"),
-                        "discard_candidate": d.get("discard_candidate"),
-                        "discard_transaction": d.get("discard_transaction"),
-                        "row": d.get("row"),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=field_names)
-
-    return records_df.mapInPandas(_decode, schema=out_schema)
-
-
-def _replay_flags(record_type: str, seq: int, last_seq_number: int):
-    """(discard_candidate, discard_transaction) for one record — the
-    reference's per-record replay markers (strict ``seq <`` comparison,
-    ext/_informixcdcmodule.ec:1459-1461,1527-1529,1585-1587)."""
-    before = seq < last_seq_number
-    cand = before if record_type == "BEGINTX" else None
-    txn = before if record_type in ("COMMTX", "RBTX") else None
-    return cand, txn
+    return _decode_df(
+        records_df,
+        lambda pdf: (parse_envelope(bytes(r)) for r in pdf["record"]),
+        [(_EPOCH0_POS, registry[table_tabid])],
+        table_tabid,
+        tabname,
+        last_seq_number,
+    )
 
 
 def decode_envelope_df(
@@ -456,57 +575,19 @@ def decode_envelope_df(
     tabname: str,
     last_seq_number: int = 0,
 ):
-    """Envelope-decoded source rows (the ``cdc-binlog`` data source's
-    output, with raw ``row_image`` bytes) → typed changelog DataFrame for
-    one captured table. The second half of the P1–P5 split: the source
-    parses envelopes; this stage applies the per-table row codec that a
-    TABSCHEM record announced (SURVEY §1.3 — the reference rebuilds its
-    column registry from DDL text the server sends in-stream).
+    """Envelope rows (the ``cdc-binlog`` source's output, with raw
+    ``row_image`` bytes) → typed changelog DataFrame for one captured
+    table, decoded with the one schema ``registry[table_tabid]``: the
+    one-epoch call of :func:`decode_envelope_df_evolving`.
     ``last_seq_number`` stamps the per-record replay markers, as in
     :func:`decode_stream_df`."""
-    from informixcdc_spark.cdc.model import changelog_schema
-    from informixcdc_spark.cdc.typemap import to_struct
-
-    cols = registry[table_tabid]
-    out_schema = changelog_schema(to_struct(cols))
-    field_names = [f.name for f in out_schema.fields]
-    iud = {"INSERT", "DELETE", "UPDBEF", "UPDAFT"}
-
-    def _decode(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.record_type == "TABSCHEM" or (
-                    r.tabid is not None
-                    and not pd.isna(r.tabid)
-                    and int(r.tabid) != table_tabid
-                ):
-                    continue  # schema announcements / other tables' events
-                is_iud = r.record_type in iud
-                cand, txn = _replay_flags(
-                    r.record_type, int(r.seq_number), last_seq_number
-                )
-                rows.append(
-                    {
-                        "seq_number": int(r.seq_number),
-                        "record_type": r.record_type,
-                        "transaction_id": r.transaction_id,
-                        "tabid": int(r.tabid) if is_iud else None,
-                        "tabname": tabname if is_iud else None,
-                        "flags": int(r.flags) if is_iud else None,
-                        "start_time": r.start_time,
-                        "commit_time": r.commit_time,
-                        "user_id": r.user_id,
-                        "discard_candidate": cand,
-                        "discard_transaction": txn,
-                        "row": decode_row_image(cols, bytes(r.row_image), 0)
-                        if is_iud
-                        else None,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=field_names)
-
-    return envelope_df.mapInPandas(_decode, schema=out_schema)
+    return decode_envelope_df_evolving(
+        envelope_df,
+        [(_EPOCH0_POS, registry[table_tabid])],
+        table_tabid,
+        tabname,
+        last_seq_number,
+    )
 
 
 def decode_envelope_df_evolving(
@@ -516,10 +597,12 @@ def decode_envelope_df_evolving(
     tabname: str,
     last_seq_number: int = 0,
 ):
-    """Schema-evolution variant of :func:`decode_envelope_df`: rows decode
-    with the schema IN FORCE at their stream position.
-    ``last_seq_number`` stamps the per-record replay markers, as in
-    :func:`decode_stream_df`.
+    """Envelope rows → typed changelog DataFrame for one captured table,
+    each row decoded with the schema IN FORCE at its stream position —
+    the second half of the P1–P5 split: the source parses envelopes;
+    this stage applies the per-table row codec that a TABSCHEM record
+    announced (SURVEY §1.3). ``last_seq_number`` stamps the per-record
+    replay markers, as in :func:`decode_stream_df`.
 
     ``schema_log`` is [(stream_pos, cols), ...] from the capture's own
     TABSCHEM records (ALTER TABLE re-announces the schema mid-stream —
@@ -538,64 +621,6 @@ def decode_envelope_df_evolving(
     narrowing re-TYPE fails loudly at the Arrow boundary rather than
     silently truncating).
     """
-    import bisect
-
-    from informixcdc_spark.cdc.model import changelog_schema
-    from informixcdc_spark.cdc.typemap import to_struct
-
-    epochs = sorted(schema_log, key=lambda e: e[0])
-    if not epochs:
-        raise ValueError("schema_log is empty — no TABSCHEM for table")
-    positions = [pos for pos, _ in epochs]
-    latest = epochs[-1][1]
-    latest_names = [c.name for c in latest]
-    out_schema = changelog_schema(to_struct(latest))
-    field_names = [f.name for f in out_schema.fields]
-    iud = {"INSERT", "DELETE", "UPDBEF", "UPDAFT"}
-
-    def _cols_at(pos: int) -> list[WireColumn]:
-        i = bisect.bisect_right(positions, pos) - 1
-        if i < 0:
-            raise ValueError(f"record at stream_pos={pos} precedes first TABSCHEM")
-        return epochs[i][1]
-
-    def _decode(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.record_type == "TABSCHEM" or (
-                    r.tabid is not None
-                    and not pd.isna(r.tabid)
-                    and int(r.tabid) != table_tabid
-                ):
-                    continue
-                is_iud = r.record_type in iud
-                if is_iud:
-                    decoded = decode_row_image(
-                        _cols_at(int(r.stream_pos)), bytes(r.row_image), 0
-                    )
-                    row = {n: decoded.get(n) for n in latest_names}
-                else:
-                    row = None
-                cand, txn = _replay_flags(
-                    r.record_type, int(r.seq_number), last_seq_number
-                )
-                rows.append(
-                    {
-                        "seq_number": int(r.seq_number),
-                        "record_type": r.record_type,
-                        "transaction_id": r.transaction_id,
-                        "tabid": int(r.tabid) if is_iud else None,
-                        "tabname": tabname if is_iud else None,
-                        "flags": int(r.flags) if is_iud else None,
-                        "start_time": r.start_time,
-                        "commit_time": r.commit_time,
-                        "user_id": r.user_id,
-                        "discard_candidate": cand,
-                        "discard_transaction": txn,
-                        "row": row,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=field_names)
-
-    return envelope_df.mapInPandas(_decode, schema=out_schema)
+    return _decode_df(
+        envelope_df, _envelope_rows, schema_log, table_tabid, tabname, last_seq_number
+    )

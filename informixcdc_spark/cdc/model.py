@@ -40,10 +40,6 @@ class RecordType(IntEnum):
     ERROR = 202
 
 
-#: record_type string names as the reference emits them
-#: (ext/_informixcdcmodule.ec:1903-1910 sets a string name on every dict)
-RECORD_NAMES = {t.value: t.name for t in RecordType}
-
 #: wire constants (ext/_informixcdcmodule.ec:56-63)
 PACKET_SCHEME = 66
 ENVELOPE_SZ = 16  # RECORD_HEADER_OFFSET
@@ -69,8 +65,8 @@ def changelog_schema(row_struct: StructType | None = None) -> StructType:
         # per-record replay markers (ext/_informixcdcmodule.ec:1459-1461,
         # 1527-1529,1585-1587): discard_candidate on BEGINTX,
         # discard_transaction on COMMTX/RBTX, NULL elsewhere. Populated by
-        # the binary decoders (decode_stream_df/decode_envelope_df with a
-        # last_seq_number) or by apply.with_discard_flags on an
+        # the binary decoder (cdc/binary.py, every decode entry point
+        # takes a last_seq_number) or by apply.with_discard_flags on an
         # already-decoded changelog; NULL when the producer knows no
         # watermark (e.g. the synthetic generator).
         StructField("discard_candidate", BooleanType(), True),

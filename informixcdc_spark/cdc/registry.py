@@ -12,7 +12,7 @@ rows from pre-restart epochs without ever re-reading their TABSCHEM
 records (which the source's offset log has already consumed and will
 never redeliver).
 
-Epoch semantics (shared with
+Epoch semantics (shared with the engine's one decoder,
 :func:`informixcdc_spark.cdc.binary.decode_envelope_df_evolving`): a
 row decodes with the schema whose announcement position is the greatest
 one ≤ the row's ``stream_pos``. Supported transitions between epochs:
@@ -101,7 +101,8 @@ class EpochRegistry:
 
     def epochs(self) -> list[tuple[int, list[WireColumn]]]:
         """[(stream_pos, parsed cols), ...] ascending — the ``schema_log``
-        shape :func:`decode_envelope_df_evolving` consumes."""
+        shape the engine's one decoder consumes
+        (:func:`~informixcdc_spark.cdc.binary.decode_envelope_df_evolving`)."""
         return [(p, self._cols(i)) for i, p in enumerate(self._positions)]
 
     def _cols(self, i: int) -> list[WireColumn]:

@@ -16,9 +16,10 @@ concatenation of framed records in the reference's exact wire format
   ``max_records`` analog), exactly-once via the offset log.
 
 Envelope decode happens per-partition on executors (one partition per
-capture file) with the same scalar codec the rest of the engine uses —
-at scale this parallelizes by file, the same unit the reference's double
-buffer serializes on.
+capture file) through the engine's one envelope parser
+(``cdc/binary.py::parse_envelope``, which also defines the source schema
+``BINLOG_DDL``) — at scale this parallelizes by file, the same unit the
+reference's double buffer serializes on.
 """
 
 from __future__ import annotations
@@ -34,24 +35,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from informixcdc_spark.cdc.binary import decode_record, split_stream
-from informixcdc_spark.cdc.model import ENVELOPE_SZ, CHANGE_HEADER_SZ, RecordType
-
-#: generic envelope schema: every variant's fields nullable (§1.2), plus
-#: the raw row image so a downstream per-table decode stage (P4/P5) can
-#: apply the typed codec without re-reading the capture.
-BINLOG_DDL = (
-    "seq_number BIGINT, record_type STRING, transaction_id BIGINT, "
-    "tabid INT, flags INT, start_time BIGINT, commit_time BIGINT, "
-    "user_id INT, cols_desc STRING, row_image BINARY, stream_pos BIGINT"
-)
-
-_IUD = {
-    RecordType.INSERT.value,
-    RecordType.DELETE.value,
-    RecordType.UPDBEF.value,
-    RecordType.UPDAFT.value,
-}
+from informixcdc_spark.cdc.binary import BINLOG_DDL, parse_envelope, split_stream
+from informixcdc_spark.cdc.model import RecordType
 
 
 def _capture_files(path: str) -> list[str]:
@@ -62,33 +47,17 @@ def _capture_files(path: str) -> list[str]:
 
 
 def _decode_file(fname: str, file_idx: int = 0) -> Iterator[tuple]:
-    """Decode one capture file. ``stream_pos`` = (file_idx << 32) | record
-    ordinal — a total order over the capture, the LSN analog: control
-    records that carry no seq (TABSCHEM) still get a position, which is
-    what anchors schema epochs (see decode_envelope_df_evolving)."""
+    """Envelope rows of one capture file, through the engine's one
+    envelope parser. ``stream_pos`` = (file_idx << 32) | record ordinal
+    — a total order over the capture, the LSN analog: control records
+    that carry no seq (TABSCHEM) still get a position, which is what
+    anchors schema epochs (see decode_envelope_df_evolving)."""
     with open(fname, "rb") as fh:
         buf = fh.read()
     # strict: a capture file is a complete unit — a torn tail record
     # means truncated storage and must fail loudly, not vanish
     for i, rec in enumerate(split_stream(buf, strict=True)):
-        d = decode_record(rec)
-        tag = RecordType[d["record_type"]].value if d["record_type"] in RecordType.__members__ else -1
-        row_image = (
-            bytes(rec[ENVELOPE_SZ + CHANGE_HEADER_SZ :]) if tag in _IUD else None
-        )
-        yield (
-            d.get("seq_number"),
-            d["record_type"],
-            d.get("transaction_id"),
-            d.get("tabid"),
-            d.get("flags"),
-            d.get("start_time"),
-            d.get("commit_time"),
-            d.get("user_id"),
-            d.get("cols_desc"),
-            row_image,
-            (file_idx << 32) | i,
-        )
+        yield parse_envelope(rec, (file_idx << 32) | i)
 
 
 class _FilePartition(InputPartition):

@@ -153,8 +153,8 @@ class Materializer:
     def _align_rows(self, df: DataFrame, row_t) -> DataFrame:
         """Project a materialized table onto the CURRENT epoch's row
         fields: added columns null-fill, dropped columns vanish, widened
-        columns cast — the same transition set the evolving decoder
-        supports (cdc/binary.py decode_envelope_df_evolving)."""
+        columns cast — the same transition set the decoder supports
+        across schema epochs (cdc/binary.py decode_envelope_df_evolving)."""
         have = set(df.columns)
         return df.select(
             *[
@@ -539,10 +539,10 @@ class MultiTableMaterializer:
 
     Per micro-batch the envelope slice is localCheckpoint'ed ONCE (one
     source read feeds every table), then each table's events decode
-    with that table's wire schema
-    (:func:`informixcdc_spark.cdc.binary.decode_envelope_df` keeps
-    table-less lifecycle records and drops other tables' rows — the
-    same split contract as
+    with that table's schema epochs through the engine's one decoder
+    (:func:`informixcdc_spark.cdc.binary.decode_envelope_df_evolving`
+    keeps table-less lifecycle records and drops other tables' rows —
+    the same split contract as
     :func:`informixcdc_spark.cdc.apply.apply_changes_by_table`) and
     apply through the table's own bucket-scoped :class:`Materializer`
     under ``state_dir/<tabname>``.
@@ -554,24 +554,22 @@ class MultiTableMaterializer:
     share a pointer, so there is no cross-table torn state. A TRUNCATE
     is table-scoped by the decode split, exactly like the batch path.
 
-    ``tables``: ``{tabname: (tabid, wire_cols, key_cols)}``.
+    ``tables``: ``{tabname: (tabid, wire_cols, key_cols)}``. Each table
+    has an :class:`~informixcdc_spark.cdc.registry.EpochRegistry`, and
+    its rows decode with the schema in force at their stream position
+    (constructor ``wire_cols`` = epoch 0).
 
-    ``evolving=True`` arms per-table schema evolution: each table gets a
-    persistent :class:`~informixcdc_spark.cdc.registry.EpochRegistry`
-    (stored through that table's own StateStore doc channel, so epochs
+    ``evolving=True`` arms per-table schema evolution: the registries
+    persist through each table's own StateStore doc channel (so epochs
     survive a stream restart), every batch's TABSCHEM announcements are
     collected ONCE (one metadata-sized job, not one per table) and fed
-    to the owning registry, rows decode with the schema in force at
-    their stream position (constructor ``wire_cols`` = epoch 0), and
-    the batch that first sees a table's new epoch rewrites that table's
-    buckets in the new shape — a mid-stream ALTER on one table needs no
-    engine restart and never disturbs the other tables. The reference
+    to the owning registry, and the batch that first sees a table's new
+    epoch rewrites that table's buckets in the new shape — a mid-stream
+    ALTER on one table needs no engine restart and never disturbs the
+    other tables. The reference
     rebuilds its registry from the same in-stream announcements but
     loses it on disconnect (ext/_informixcdcmodule.ec:1722-1804).
     """
-
-    #: epoch-0 sentinel: precedes every real stream position
-    _EPOCH0_POS = -(1 << 62)
 
     def __init__(
         self,
@@ -600,14 +598,13 @@ class MultiTableMaterializer:
         self._tab_by_id = {
             tabid: tab for tab, (tabid, _cols, _keys) in self.tables.items()
         }
-        self.registries = (
-            {
-                tab: EpochRegistry(tabid, store=self.mats[tab].store)
-                for tab, (tabid, _cols, _keys) in self.tables.items()
-            }
-            if evolving
-            else {}
-        )
+        # without evolution a registry never observes: epoch 0 only
+        self.registries = {
+            tab: EpochRegistry(
+                tabid, store=self.mats[tab].store if evolving else None
+            )
+            for tab, (tabid, _cols, _keys) in self.tables.items()
+        }
 
     def _observe_announcements(self, env: DataFrame) -> None:
         """Feed this batch's TABSCHEM slivers to the owning registries.
@@ -629,7 +626,7 @@ class MultiTableMaterializer:
 
     def process_batch(self, envelope_df: DataFrame, batch_id: int) -> None:
         from informixcdc_spark.cdc.binary import (
-            decode_envelope_df,
+            _EPOCH0_POS,
             decode_envelope_df_evolving,
         )
 
@@ -668,25 +665,20 @@ class MultiTableMaterializer:
             # JVM-side pre-filter: only this table's rows (+ table-less
             # lifecycle records) cross the Arrow boundary — with 64
             # captured tables the alternative ships the WHOLE batch
-            # through Python once per table. decode_envelope_df keeps
-            # its own guard, so the filter is an optimization, not a
-            # correctness dependency.
+            # through Python once per table. The decoder keeps its own
+            # guard, so the filter is an optimization, not a correctness
+            # dependency.
             sub = env.where(
                 (F.col("tabid") == tabid) | F.col("tabid").isNull()
             )
-            if self.evolving:
-                reg = self.registries[tab]
-                schema_log = [(self._EPOCH0_POS, cols)] + reg.epochs()
-                typed = decode_envelope_df_evolving(sub, schema_log, tabid, tab)
-                # a changed epoch count rewrites the table once in the
-                # new shape (bucket snapshots stay schema-uniform); the
-                # count commits with the table's own pointer
-                self.mats[tab].process_batch(
-                    typed, batch_id, schema_epoch=len(reg)
-                )
-            else:
-                typed = decode_envelope_df(sub, {tabid: cols}, tabid, tab)
-                self.mats[tab].process_batch(typed, batch_id)
+            reg = self.registries[tab]
+            typed = decode_envelope_df_evolving(
+                sub, [(_EPOCH0_POS, cols)] + reg.epochs(), tabid, tab
+            )
+            # a changed epoch count rewrites the table once in the new
+            # shape (bucket snapshots stay schema-uniform); the count
+            # commits with the table's own pointer
+            self.mats[tab].process_batch(typed, batch_id, schema_epoch=len(reg))
 
     def read_target(self, tab: str) -> DataFrame | None:
         return self.mats[tab].read_target()

@@ -345,3 +345,129 @@ def test_stream_restart_decodes_pre_restart_epochs(spark, tmp_path):
     # epoch-1 rows really null-fill the added column; epoch-2 rows carry it
     assert any(k <= t1 and p is None for k, _, p in got)
     assert any(k > t2 and p is not None for k, _, p in got)
+
+
+def _write_capture(path, recs):
+    os.makedirs(path)
+    with open(os.path.join(path, "part-00000.bin"), "wb") as fh:
+        fh.write(b"".join(recs))
+
+
+def test_binlog_truncate_wipes_same_batch_rows(spark, tmp_path):
+    """A committed TRUNCATE wipes rows committed earlier in the SAME
+    micro-batch on the production path (cdc-binlog → decode_envelope_df
+    → Materializer): the decoded TRUNCATE carries its table's
+    tabid/tabname, which the truncate floor groups by."""
+    from informixcdc_spark.cdc.binary import (
+        decode_envelope_df,
+        encode_record,
+        encode_row_image,
+    )
+    from informixcdc_spark.cdc.model import RecordType
+    from informixcdc_spark.streaming.pipeline import Materializer
+
+    cols = parse_ddl("id bigint, val varchar(8)")
+
+    def ins(seq, tx, k):
+        return encode_record(
+            RecordType.INSERT, seq=seq, txid=tx, tabid=1,
+            row_image=encode_row_image(cols, {"id": k, "val": str(k)}),
+        )
+
+    cap = str(tmp_path / "cap")
+    _write_capture(
+        cap,
+        [
+            encode_record(RecordType.BEGINTX, seq=1, txid=1),
+            ins(2, 1, 1),
+            encode_record(RecordType.COMMTX, seq=3, txid=1),
+            encode_record(RecordType.BEGINTX, seq=4, txid=2),
+            encode_record(RecordType.TRUNCATE, seq=5, txid=2, tabid=1),
+            ins(6, 2, 3),
+            encode_record(RecordType.COMMTX, seq=7, txid=2),
+        ],
+    )
+    register_binlog_source(spark)
+    mat = Materializer(spark, str(tmp_path / "state"), ["id"], n_buckets=4)
+
+    def _apply(df, batch_id):
+        mat.process_batch(decode_envelope_df(df, {1: cols}, 1, "t"), batch_id)
+
+    q = (
+        spark.readStream.format("cdc-binlog")
+        .option("path", cap)
+        .load()
+        .writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert {r["id"] for r in mat.read_target().collect()} == {3}
+
+
+def test_stream_and_envelope_decoders_agree(spark, tmp_path):
+    """One capture holding every record type decodes to identical rows
+    through decode_stream_df (``record binary`` rows) and through
+    decode_envelope_df (the cdc-binlog read): both go through the one
+    envelope parser and the one row builder."""
+    from informixcdc_spark.cdc.binary import (
+        decode_envelope_df,
+        decode_stream_df,
+        encode_record,
+        encode_row_image,
+    )
+    from informixcdc_spark.cdc.model import RecordType
+
+    ddl = "id int, name varchar(20)"
+    cols = parse_ddl(ddl)
+
+    def iud(t, seq, tx, k, name, tabid=5):
+        return encode_record(
+            t, seq=seq, txid=tx, tabid=tabid, flags=seq,
+            row_image=encode_row_image(cols, {"id": k, "name": name}),
+        )
+
+    recs = [
+        encode_record(RecordType.TABSCHEM, tabid=5, flags=1, cols_desc=ddl),
+        encode_record(RecordType.BEGINTX, seq=1, txid=1, start_time=100, user_id=7),
+        iud(RecordType.INSERT, 2, 1, 1, "a"),
+        iud(RecordType.UPDBEF, 3, 1, 1, "a"),
+        iud(RecordType.UPDAFT, 4, 1, 1, None),
+        iud(RecordType.DELETE, 5, 1, 1, None),
+        encode_record(RecordType.COMMTX, seq=6, txid=1, commit_time=200),
+        encode_record(RecordType.BEGINTX, seq=7, txid=2),
+        iud(RecordType.INSERT, 8, 2, 2, "b"),
+        encode_record(RecordType.RBTX, seq=9, txid=2),
+        encode_record(RecordType.BEGINTX, seq=10, txid=3),
+        encode_record(RecordType.DISCARD, seq=11, txid=3),
+        encode_record(RecordType.BEGINTX, seq=12, txid=4),
+        encode_record(RecordType.TRUNCATE, seq=13, txid=4, tabid=5),
+        encode_record(RecordType.TIMEOUT, seq=14),
+        iud(RecordType.INSERT, 15, 4, 9, "foreign", tabid=6),
+        iud(RecordType.INSERT, 16, 4, 3, "c"),
+        encode_record(RecordType.COMMTX, seq=17, txid=4, commit_time=300),
+    ]
+    cap = str(tmp_path / "cap")
+    _write_capture(cap, recs)
+    register_binlog_source(spark)
+    records = spark.createDataFrame([(r,) for r in recs], "record binary")
+    envelopes = spark.read.format("cdc-binlog").option("path", cap).load()
+
+    stream = decode_stream_df(records, {5: cols}, 5, "t", last_seq_number=7)
+    env = decode_envelope_df(envelopes, {5: cols}, 5, "t", last_seq_number=7)
+    assert stream.schema == env.schema
+    got = stream.orderBy("seq_number").collect()
+    assert got == env.orderBy("seq_number").collect()
+
+    by_seq = {r["seq_number"]: r for r in got}
+    # TABSCHEM and the foreign table's INSERT are dropped, nothing else
+    assert sorted(by_seq) == [s for s in range(1, 18) if s != 15]
+    assert by_seq[13]["record_type"] == "TRUNCATE"
+    assert (by_seq[13]["tabid"], by_seq[13]["tabname"]) == (5, "t")
+    assert by_seq[1]["start_time"] == 100 and by_seq[1]["user_id"] == 7
+    assert by_seq[1]["discard_candidate"] is True
+    assert by_seq[6]["discard_transaction"] is True
+    assert by_seq[12]["discard_candidate"] is False
+    assert by_seq[4]["row"]["name"] is None and by_seq[4]["flags"] == 4
+    assert by_seq[14]["tabid"] is None and by_seq[14]["row"] is None

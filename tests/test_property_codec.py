@@ -153,3 +153,86 @@ def test_split_stream_never_yields_truncated_tail(recs, data):
     assert got == recs[: len(got)]
     # and the cut frame itself was withheld, not emitted short
     assert sum(len(r) for r in got) <= cut
+
+
+# ---- fail-closed framing and record decode (corrupt input) ----
+
+import itertools  # noqa: E402
+import struct  # noqa: E402
+
+import pytest  # noqa: E402
+
+from informixcdc_spark.cdc.binary import decode_record  # noqa: E402
+
+
+@st.composite
+def envelope_soup(draw):
+    """Arbitrary bytes, biased towards scheme-66 envelopes with arbitrary
+    (also zero and negative) sizes, so the walk gets past the scheme
+    check and meets the size checks."""
+    parts = []
+    for _ in range(draw(st.integers(0, 6))):
+        if draw(st.booleans()):
+            parts.append(
+                struct.pack(
+                    ">iiii",
+                    draw(st.integers(-40, 60)),
+                    draw(st.integers(-40, 60)),
+                    draw(st.sampled_from([66, 66, 66, 0])),
+                    draw(st.integers(-(1 << 31), (1 << 31) - 1)),
+                )
+            )
+        parts.append(draw(st.binary(max_size=48)))
+    return b"".join(parts)
+
+
+@settings(max_examples=examples(300), derandomize=True, deadline=None)
+@given(envelope_soup(), st.booleans())
+def test_split_stream_fails_closed_on_arbitrary_bytes(buf, strict):
+    """On any input split_stream terminates, raises nothing but
+    ValueError, and yields frames of at least 16 bytes that tile the
+    buffer contiguously from offset 0."""
+    frames = []
+    try:
+        for frame in split_stream(buf, strict=strict):
+            frames.append(frame)
+            assert len(frames) <= len(buf) // 16, "walk did not advance"
+    except ValueError:
+        pass
+    assert all(len(f) >= 16 for f in frames)
+    assert b"".join(frames) == buf[: sum(len(f) for f in frames)]
+
+
+@settings(max_examples=examples(300), derandomize=True, deadline=None)
+@given(
+    st.one_of(
+        st.sampled_from([t.value for t in RecordType]),
+        st.integers(-(1 << 31), (1 << 31) - 1),
+    ),
+    st.binary(max_size=64),
+)
+def test_decode_record_decodes_or_raises_value_error(tag, tail):
+    """A valid envelope followed by an arbitrary tail either decodes or
+    raises ValueError — never a raw struct.error."""
+    rec = struct.pack(">iiii", 16, len(tail), 66, tag) + tail
+    try:
+        out = decode_record(rec, registry=None)
+    except ValueError:
+        return
+    assert out["record_type"] == RecordType(tag).name
+
+
+def test_corrupt_frames_raise_value_error_naming_the_problem():
+    # islice bounds the walk: a walk that does not advance must not hang
+    zero = struct.pack(">iiii", 0, 0, 66, 201)
+    with pytest.raises(ValueError, match="at offset 0"):
+        list(itertools.islice(split_stream(zero), 4))
+    ok = encode_record(RecordType.TIMEOUT, seq=1)
+    negative = ok + struct.pack(">iiii", 16, -32, 66, 201)
+    with pytest.raises(ValueError, match="at offset 24"):
+        list(itertools.islice(split_stream(negative), 4))
+    short_insert = struct.pack(">iiii", 16, 0, 66, RecordType.INSERT.value)
+    with pytest.raises(ValueError, match="INSERT record of 16 bytes"):
+        decode_record(short_insert)
+    with pytest.raises(ValueError, match="unknown record tag 99"):
+        decode_record(struct.pack(">iiii", 16, 0, 66, 99))
